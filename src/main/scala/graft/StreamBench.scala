@@ -8,11 +8,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.kernel.{KinesisEntry, KplProtobuf}
-import graft.streaming.{HttpKinesisTransport, KinesisTransport, SigV4, StreamPipeline}
+import graft.streaming.{HttpKinesisTransport, KinesisTransport, RetryingTransport, SigV4, StreamPipeline}
 
 /** Streaming throughput benchmark: N synthetic NSQ-envelope messages
   * (1 kB bodies, 10 % duplicates) through the full pipeline — fnv64a →
-  * watermark dedup → oversize filter → per-partition KPL pack → chunked
+  * watermark dedup → per-partition oversize drop + KPL pack → chunked
   * PutRecords against the in-memory transport — and reports end-to-end
   * user-records/s plus packing stats. One JSON line, same contract as
   * [[Bench]].
@@ -327,7 +327,6 @@ object StreamBench {
         import org.apache.spark.sql.functions._
         val transformed = input.toDF()
           .withColumn("body_hash", graft.functions.GraftFunctions.fnv64a(col("body")))
-          .filter(octet_length(col("body")) <= graft.streaming.BatchWriter.MaxMessageSize)
           .withColumn("partition_key",
             graft.functions.GraftFunctions.partitionKey(col("body"), lit(null).cast("string")))
         transformed.writeStream
@@ -346,7 +345,8 @@ object StreamBench {
       case "http" | "http_signed" =>
         StreamPipeline.build(
           input.toDF(),
-          new HttpKinesisTransport(httpSink.get.endpoint, credentials = creds),
+          new RetryingTransport(
+            new HttpKinesisTransport(httpSink.get.endpoint, credentials = creds)),
           StreamPipeline.Options(streamName = "bench", checkpoint = ckpt, triggerMs = 10L))
       case "http_chaos" =>
         // sustained throttle storm (1-in-5 requests rejected whole) absorbed
@@ -354,7 +354,7 @@ object StreamBench {
         // real backoff sleeps ARE part of the measured cost
         StreamPipeline.build(
           input.toDF(),
-          new graft.streaming.RetryingTransport(
+          new RetryingTransport(
             new HttpKinesisTransport(httpSink.get.endpoint), maxRetries = 6),
           StreamPipeline.Options(streamName = "bench", checkpoint = ckpt, triggerMs = 10L))
       case _ =>

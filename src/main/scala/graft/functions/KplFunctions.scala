@@ -22,8 +22,8 @@ object KplFunctions {
     * oracle-friendly form (callers fix the order with `sort_array` or an
     * ordered `collect_list`). Packing is order-dependent by construction
     * (aggregator.go:148-170), so determinism must come from the caller. */
-  def packOrdered(rows: Seq[KplIn], targetSize: Int = KplPacker.DefaultTargetSize): Seq[KplEntry] = {
-    val p = new KplPacker(targetSize)
+  def packOrdered(rows: Seq[KplIn]): Seq[KplEntry] = {
+    val p = new KplPacker
     rows.foreach(r => p.put(r.body, Option(r.key).getOrElse("")))
     p.drain().map(e => KplEntry(e.data, e.partitionKey))
   }

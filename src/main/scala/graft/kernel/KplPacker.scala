@@ -15,27 +15,26 @@ final case class KinesisEntry(
   * re-expressed as a pure sequential state machine.
   *
   * Semantics pinned by the reference tests (aggregator_test.go):
-  *  - records larger than `targetSize` bypass packing as standalone entries;
+  *  - records larger than [[KplPacker.TargetSize]] bypass packing as
+  *    standalone entries;
   *  - an in-progress aggregate is closed when the next record (plus its key
-  *    charge) would push `curSize` strictly over `targetSize`;
+  *    charge) would push `curSize` strictly over `TargetSize`;
   *  - partition keys are dictionary-encoded per aggregate: a key's bytes are
   *    charged against the aggregate only the first time it appears;
   *  - a finalized entry's Kinesis partition key is the FIRST user record's
   *    key (aggregator.go:58);
   *  - `put` returns the slot index the record's output entry will occupy in
-  *    the `drain()` result, so callers can route per-entry failures back to
-  *    source records (kinesis_writer.go:69-73); unlike the Go original's
-  *    oversize path (aggregator.go:142, off by one, untested there), the
-  *    returned slot is always the entry's actual index.
+  *    the `drain()` result, the reference's per-entry routing handle
+  *    (kinesis_writer.go:69-73); unlike the Go original's oversize path
+  *    (aggregator.go:142, off by one, untested there), the returned slot is
+  *    always the entry's actual index.
   *
   * In the Spark engine this runs strictly per-partition (a fold over a
   * partition iterator or an Aggregator buffer) — no cross-partition state, so
   * scaling out is embarrassingly parallel. Not thread-safe by design: Spark
   * gives each task its own instance, unlike the mutex-guarded Go original.
   */
-final class KplPacker(
-    val targetSize: Int = KplPacker.DefaultTargetSize,
-    partitioner: Array[Byte] => String = Fnv64a.hex) {
+final class KplPacker {
 
   private val records = mutable.ArrayBuffer.empty[KplProtobuf.UserRecord]
   private val partIds = mutable.LinkedHashMap.empty[String, Int]
@@ -61,22 +60,21 @@ final class KplPacker(
     * the reference's envelope supports but its pipeline never populated
     * (proto/aggregation.proto:8,18, partitioned.go stub). */
   def put(body: Array[Byte], key: String = "", ehk: String = ""): Int = {
-    val partKey = if (key.isEmpty || key.length > 255) partitioner(body) else key
+    val partKey = if (key.isEmpty || key.length > 255) Fnv64a.hex(body) else key
 
-    if (body.length > targetSize) {
+    if (body.length > KplPacker.TargetSize) {
       completed += KinesisEntry(body, partKey, Option(ehk).filter(_.nonEmpty))
       nbyte += body.length + partKey.length
       nrec += 1
       // NOTE: deliberate deviation — the Go original returns
       // len(completedRecs) here (one past the entry's index,
       // aggregator.go:142), which its own tests never pin and which would
-      // misroute per-entry ack/requeue in BatchWriter.slotSources. Return
-      // the entry's actual slot.
+      // misroute a per-entry ack/requeue. Return the entry's actual slot.
       return completed.length - 1
     }
 
-    if (records.nonEmpty && curSize + body.length + partKey.length + ehk.length > targetSize)
-      closeCurrent()
+    if (records.nonEmpty &&
+        curSize + body.length + partKey.length + ehk.length > KplPacker.TargetSize) closeCurrent()
 
     var recSize = body.length
     val keyIdx = partIds.getOrElseUpdate(partKey, {
@@ -124,15 +122,5 @@ final class KplPacker(
 
 object KplPacker {
   /** 25 kB — one Kinesis PUT payload unit (aggregator.go:76,93). */
-  val DefaultTargetSize = 25000
-
-  /** Pack a whole (partition-local) iterator and drain — the shape used from
-    * Spark `mapPartitions` / aggregation buffers. */
-  def packAll(
-      rows: Iterator[(Array[Byte], String)],
-      targetSize: Int = DefaultTargetSize): Vector[KinesisEntry] = {
-    val p = new KplPacker(targetSize)
-    rows.foreach { case (body, key) => p.put(body, key) }
-    p.drain()
-  }
+  val TargetSize = 25000
 }

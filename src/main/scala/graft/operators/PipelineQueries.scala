@@ -15,8 +15,8 @@ import graft.kernel.KplPacker
   * Scale notes: packing streams each partition's sorted iterator through
   * [[KplPacker]] — the same shape as the streaming path
   * (graft.streaming.BatchWriter) — so no group is ever materialized whole;
-  * an unbounded event_type stays O(targetSize) in memory. Dedup is a
-  * hash-groupBy — one shuffle on the 64-bit body hash, the same layout
+  * an unbounded event_type stays O(`KplPacker.TargetSize`) in memory. Dedup
+  * is a hash-groupBy — one shuffle on the 64-bit body hash, the same layout
   * Spark would use for dropDuplicates.
   */
 object PipelineQueries {
@@ -33,7 +33,7 @@ object PipelineQueries {
     * co-located), sortWithinPartitions for the deterministic packing order,
     * then a streaming per-partition fold — one packer per contiguous run of
     * equal keys, flushed at each key change. Memory is bounded by one
-    * in-progress aggregate (≤ targetSize), never a whole group. */
+    * in-progress aggregate (≤ `KplPacker.TargetSize`), never a whole group. */
   def gKplRoundtrip(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.registerAll(s)
     import s.implicits._

@@ -4,12 +4,6 @@ import scala.collection.mutable
 
 import graft.kernel.{KinesisEntry, KplPacker}
 
-/** One flushed `PutRecords` request: the packed entries plus, per entry, the
-  * indices of the source records that landed in it (the reference's
-  * slot-routing map, kinesis_writer.go:34,69-73) so per-entry failures can
-  * be acked/requeued per source record. */
-final case class PutRequest(entries: Vector[KinesisEntry], slotSources: Map[Int, Vector[Long]])
-
 /** Request-level batching on top of [[KplPacker]] — the engine's analogue of
   * the reference's `KinesisBatchWriter` (kinesis_writer.go:52-205) minus the
   * AWS client:
@@ -19,44 +13,36 @@ final case class PutRequest(entries: Vector[KinesisEntry], slotSources: Map[Int,
   *  - a record that would exceed either bound flushes the current request
   *    first, then re-adds (the flush-and-retry loop, kinesis_writer.go:172-181);
   *  - bodies >1 MiB are dropped (O6 oversize filter, kinesis_writer.go:167-170);
+  *    this is the pipeline's only oversize check;
   *  - `flush()` drains the tail request (graceful shutdown, O15).
   *
   * Runs strictly per Spark task/partition — single-threaded by construction.
   */
-final class BatchWriter(
-    maxRecords: Int = BatchWriter.MaxBatchRecords,
-    maxBytes: Int = BatchWriter.MaxBatchBytes,
-    targetSize: Int = KplPacker.DefaultTargetSize) {
+final class BatchWriter {
 
-  private var packer = new KplPacker(targetSize)
-  private val sources = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
-  private val flushed = mutable.ArrayBuffer.empty[PutRequest]
+  private val packer = new KplPacker
+  private val flushed = mutable.ArrayBuffer.empty[Vector[KinesisEntry]]
   private var dropped = 0L
 
   def droppedCount: Long = dropped
 
-  /** Add one source record (recordId is caller bookkeeping, e.g. row index
-    * or message id hash). Oversize bodies are dropped, mirroring the
-    * reference's silent `continue`. A non-empty `ehk` threads through to the
-    * packer's explicit-hash-key table for shard-targeted routing. */
-  def add(recordId: Long, body: Array[Byte], key: String = "", ehk: String = ""): Unit = {
+  /** Add one source record. Oversize bodies are dropped, mirroring the
+    * reference's silent `continue`. */
+  def add(body: Array[Byte], key: String): Unit = {
     if (body.length > BatchWriter.MaxMessageSize) { dropped += 1; return }
-    if (packer.count >= maxRecords ||
-        packer.size + body.length + key.length + ehk.length > maxBytes) flushCurrent()
-    val slot = packer.put(body, key, ehk)
-    sources.getOrElseUpdate(slot, mutable.ArrayBuffer.empty) += recordId
+    if (packer.count >= BatchWriter.MaxBatchRecords ||
+        packer.size + body.length + key.length > BatchWriter.MaxBatchBytes) flushCurrent()
+    packer.put(body, key)
   }
 
   private def flushCurrent(): Unit = {
     val entries = packer.drain()
-    if (entries.nonEmpty) {
-      flushed += PutRequest(entries, sources.map { case (k, v) => k -> v.toVector }.toMap)
-    }
-    sources.clear()
+    if (entries.nonEmpty) flushed += entries
   }
 
-  /** Flush the in-progress request and return every completed request. */
-  def flush(): Vector[PutRequest] = {
+  /** Flush the in-progress request and return every completed request's
+    * `PutRecords` entries. */
+  def flush(): Vector[Vector[KinesisEntry]] = {
     flushCurrent()
     val out = flushed.toVector
     flushed.clear()

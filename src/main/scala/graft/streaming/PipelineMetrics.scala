@@ -13,35 +13,24 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * kinesis_writer.go:155-158): per-batch progress from the engine's own
   * listener bus, no instrumentation inside operators.
   *
-  * Round 14 adds the X-Ray analogue the reference left TODO (TODO.md:9):
-  * per-STAGE latency attribution. Each batch carries the engine's own
-  * segment durations (`durationMs`: offset discovery, planning, addBatch
-  * = the actual sink work, WAL + offset commits) plus the state-store
-  * segments (update/remove/commit), and [[PipelineMetrics.attribution]]
-  * rolls them up into the where-does-the-time-go table a trace viewer
-  * would render — from the listener bus alone, zero code in the hot path,
-  * exactly the posture a 1000-executor deployment needs (the driver
-  * already has these numbers; nothing new is measured or shipped).
+  * Per-stage latency attribution (the X-Ray analogue the reference left
+  * TODO, TODO.md:9): each batch carries the engine's own segment durations
+  * (`durationMs`: offset discovery, planning, addBatch = the actual sink
+  * work, WAL + offset commits) plus the state-store segments
+  * (update/remove/commit), and [[PipelineMetrics.attribution]] rolls them
+  * up into the where-does-the-time-go table a trace viewer would render —
+  * from the listener bus alone, zero code in the hot path.
   *
-  * Round 17 closes the reference's remaining metrics item (TODO.md:8
-  * "Metrics (statsd or cloudwatch?)"): every batch's stats additionally
-  * fan out to pluggable [[MetricsReporter]]s — [[LogReporter]] /
-  * [[StatsdReporter]] ship in-repo; a CloudWatch/OTel sink is the same
-  * trait. Reporter failures are swallowed (a metrics outage must never
-  * wedge the listener bus, the reference's own fire-and-forget stats
-  * posture).
+  * Metrics export (the reference's TODO.md:8 "Metrics (statsd or
+  * cloudwatch?)"): every batch's stats also fan out to pluggable
+  * [[MetricsReporter]]s — [[LogReporter]] / [[StatsdReporter]] ship
+  * in-repo; a CloudWatch/OTel sink is the same trait. Reporter failures
+  * are swallowed (a metrics outage must never wedge the listener bus, the
+  * reference's own fire-and-forget stats posture).
   */
 final class PipelineMetrics(reporters: Seq[MetricsReporter] = Nil)
     extends StreamingQueryListener {
-
-  final case class BatchStats(
-      queryName: String, batchId: Long, numInputRows: Long,
-      inputRowsPerSecond: Double, processedRowsPerSecond: Double,
-      stateRows: Long,
-      /** engine segment → ms for this batch (triggerExecution = total) */
-      segments: Map[String, Long],
-      /** state-store segment → ms (updates/removals/commit, summed ops) */
-      stateSegments: Map[String, Long])
+  import PipelineMetrics.BatchStats
 
   val batches = new ConcurrentLinkedQueue[BatchStats]()
 
@@ -117,6 +106,15 @@ final class PipelineMetrics(reporters: Seq[MetricsReporter] = Nil)
 }
 
 object PipelineMetrics {
+  final case class BatchStats(
+      queryName: String, batchId: Long, numInputRows: Long,
+      inputRowsPerSecond: Double, processedRowsPerSecond: Double,
+      stateRows: Long,
+      /** engine segment → ms for this batch (triggerExecution = total) */
+      segments: Map[String, Long],
+      /** state-store segment → ms (updates/removals/commit, summed ops) */
+      stateSegments: Map[String, Long])
+
   /** Attach a fresh metrics listener to the session, fanning each
     * batch's stats out to the given reporters (none = collect-only). */
   def attach(spark: SparkSession, reporters: MetricsReporter*): PipelineMetrics = {

@@ -12,10 +12,9 @@ import graft.functions.GraftFunctions
   * source (NSQ / MemoryStream / rate)
   *   → fnv64a(body)                         // O9 identity hash
   *   → withWatermark + dropDuplicatesWithinWatermark   // O3/O4 dedup, state-store
-  *   → filter(octet_length(body) ≤ 1 MiB)   // O6 oversize drop
   *   → foreachBatch:                        // O7 micro-batch = time trigger
-  *       per partition: BatchWriter         // O8/O10/O11/O12 pack + chunk
-  *       → transport.putRecords (retry)     // O13/O14 send + per-entry routing
+  *       per partition: BatchWriter         // O6 oversize drop, O8/O10/O11/O12 pack + chunk
+  *       → transport.putRecords             // O13/O14 send; retry is the transport's
   * }}}
   *
   * Delivery semantics: at-least-once — offsets commit only after the batch
@@ -54,36 +53,30 @@ object StreamPipeline {
       .withColumn("body_hash", GraftFunctions.fnv64a(col("body")))
       .withWatermark("ts", dedupWindow)
       .dropDuplicatesWithinWatermark("body_hash")
-      .filter(octet_length(col("body")) <= BatchWriter.MaxMessageSize)
       .withColumn("partition_key", GraftFunctions.partitionKey(col("body"), col("key")))
   }
 
   /** Sink one micro-batch: fold each partition through a BatchWriter and
-    * push requests via the transport. Total per-batch counts are returned
-    * for observability. */
+    * push its requests via `transport` as given. Retry/backoff belongs to
+    * whoever builds the transport (`Main` wraps its HTTP transport). Any
+    * entry the transport reports failed fails the task, naming the failed
+    * slots. */
   def deliverBatch(batch: Dataset[org.apache.spark.sql.Row],
                    transport: KinesisTransport,
                    streamName: String): Unit = {
     val sent = batch.selectExpr("body", "partition_key")
     sent.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       val writer = new BatchWriter()
-      var i = 0L
-      rows.foreach { r =>
-        writer.add(i, r.getAs[Array[Byte]]("body"), r.getAs[String]("partition_key"))
-        i += 1
-      }
-      val retrying = transport match {
-        case rt: RetryingTransport => rt
-        case other => new RetryingTransport(other)
-      }
-      writer.flush().foreach { req =>
-        val oks = retrying.putRecords(streamName, req.entries)
+      rows.foreach(r => writer.add(r.getAs[Array[Byte]]("body"), r.getAs[String]("partition_key")))
+      writer.flush().foreach { entries =>
+        val oks = transport.putRecords(streamName, entries)
         if (oks.contains(false)) {
           // reference: Requeue(-1) the failed slots (kinesis_writer.go:120-126);
-          // Spark model: fail the task, engine re-runs it => at-least-once
+          // Spark model: fail the task; the batch never commits, so a task
+          // retry or a restart from the checkpoint re-sends it => at-least-once
           val failedSlots = oks.zipWithIndex.collect { case (false, s) => s }
           throw new java.io.IOException(
-            s"putRecords failed for slots ${failedSlots.mkString(",")} after retries")
+            s"putRecords failed for slots ${failedSlots.mkString(",")}")
         }
       }
     }

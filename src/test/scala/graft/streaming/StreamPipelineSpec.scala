@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.{SparkSpec, SparkSuite}
 import graft.kernel.KplProtobuf
@@ -14,6 +15,11 @@ class StreamPipelineSpec extends SparkSuite {
 
   private def msg(i: Int, body: String, t: Long = 1000000000L): Msg =
     Msg(f"$i%016d", new Timestamp(t + i), 1, body.getBytes("UTF-8"))
+
+  /** The user-record bodies carried by one Kinesis entry's payload. */
+  private def userBodies(data: Array[Byte]): Vector[String] =
+    (if (KplProtobuf.isAggregated(data)) KplProtobuf.deframe(data).records.map(_.data)
+     else Vector(data)).map(new String(_, "UTF-8")).toVector
 
   test("memory-stream pipeline dedups, packs, and delivers KPL entries") {
     import spark.implicits._
@@ -65,7 +71,7 @@ class StreamPipelineSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("oversize bodies are dropped by the stream filter") {
+  test("oversize bodies are dropped before delivery") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     InMemoryTransport.clear()
@@ -88,12 +94,10 @@ class StreamPipelineSpec extends SparkSuite {
 
   test("BatchWriter request bounds: 600 records split at 500") {
     val w = new BatchWriter()
-    (0 until 600).foreach(i => w.add(i.toLong, s"rec-$i".getBytes, "k"))
+    (0 until 600).foreach(i => w.add(s"rec-$i".getBytes, "k"))
     val reqs = w.flush()
     assert(reqs.length === 2)
-    def userCount(r: PutRequest) = r.entries.map { e =>
-      if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.length else 1
-    }.sum
+    def userCount(r: Seq[graft.kernel.KinesisEntry]) = r.map(e => userBodies(e.data).length).sum
     assert(userCount(reqs(0)) === 500)
     assert(userCount(reqs(1)) === 100)
   }
@@ -101,22 +105,22 @@ class StreamPipelineSpec extends SparkSuite {
   test("BatchWriter byte bound: requests stay under 4.9 MB") {
     val w = new BatchWriter()
     val body = new Array[Byte](500000) // 0.5 MB, 12 per request fit under 4.9MB? 9 fit
-    (0 until 20).foreach(i => w.add(i.toLong, body, "k"))
+    (0 until 20).foreach(_ => w.add(body, "k"))
     val reqs = w.flush()
     assert(reqs.length >= 2)
     reqs.foreach { r =>
-      val bytes = r.entries.map(_.data.length).sum
+      val bytes = r.map(_.data.length).sum
       assert(bytes <= BatchWriter.MaxBatchBytes + 25000) // entry overhead margin
     }
   }
 
   test("BatchWriter drops oversize and counts them") {
     val w = new BatchWriter()
-    w.add(0, new Array[Byte](BatchWriter.MaxMessageSize + 1), "k")
-    w.add(1, "ok".getBytes, "k")
+    w.add(new Array[Byte](BatchWriter.MaxMessageSize + 1), "k")
+    w.add("ok".getBytes, "k")
     assert(w.droppedCount === 1)
     val reqs = w.flush()
-    assert(reqs.map(_.entries.size).sum === 1)
+    assert(reqs.map(_.size).sum === 1)
   }
 
   test("RetryingTransport: flaky entries succeed on retry with backoff") {
@@ -138,5 +142,68 @@ class StreamPipelineSpec extends SparkSuite {
     val entries = (0 until 3).map(i => graft.kernel.KinesisEntry(s"e$i".getBytes, s"k$i")).toVector
     val oks = rt.putRecords("s", entries)
     assert(oks === Vector(false, true, true))
+  }
+
+  test("file transport: on-disk frames decode back to the input bodies") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("kfile").toString
+    val input = MemoryStream[Msg]
+    // enough bytes per partition for several 25 kB aggregates per request,
+    // plus one body over 25 kB that ships as a standalone entry
+    val bodies = (0 until 200).map(i => s"file-$i-${"y" * (i % 7 * 300)}") :+ "z" * 30000
+    input.addData(bodies.zipWithIndex.map { case (b, i) => msg(i, b) })
+    val q = StreamPipeline.build(input.toDF(), new FileTransport(dir),
+      StreamPipeline.Options(streamName = "fstream",
+        checkpoint = java.nio.file.Files.createTempDirectory("kfile-ckpt").toString)).start()
+    try q.processAllAvailable() finally q.stop()
+
+    val files = new java.io.File(dir).listFiles()
+    assert(files != null && files.nonEmpty)
+    assert(files.forall(_.getName.startsWith("fstream-p")))
+    // FileTransport frame: [int key length][int data length][key][data]
+    val decoded = files.toVector.flatMap { f =>
+      val buf = java.nio.ByteBuffer.wrap(java.nio.file.Files.readAllBytes(f.toPath))
+      val out = Vector.newBuilder[String]
+      while (buf.hasRemaining) {
+        val key = new Array[Byte](buf.getInt())
+        val data = new Array[Byte](buf.getInt())
+        buf.get(key); buf.get(data)
+        assert(key.nonEmpty, "every entry carries a partition key")
+        out ++= userBodies(data)
+      }
+      out.result()
+    }
+    assert(decoded.sorted === bodies.sorted)
+  }
+
+  test("permanent PutRecords failure fails the query; restart delivers all") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    InMemoryTransport.clear()
+    val input = MemoryStream[Msg]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-alo-ckpt").toString
+    val bodies = (0 until 60).map(i => s"alo-$i")
+    input.addData(bodies.zipWithIndex.map { case (b, i) => msg(i, b) })
+    def start(transport: KinesisTransport) = StreamPipeline.build(input.toDF(), transport,
+      StreamPipeline.Options(streamName = "alo", checkpoint = ckpt)).start()
+
+    val down = new RetryingTransport(
+      new FlakyTransport(new InMemoryTransport, (_, _) => true), maxRetries = 2, sleeper = _ => ())
+    val q1 = start(down)
+    val failure = intercept[StreamingQueryException] {
+      try q1.processAllAvailable() finally q1.stop()
+    }
+    val messages = Iterator.iterate[Throwable](failure)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toVector
+    assert(messages.exists(_.contains("putRecords failed for slots 0")), messages.mkString(" | "))
+    assert(InMemoryTransport.drain().isEmpty, "a permanently failing transport accepted entries")
+
+    // the failed batch never committed, so the restart replays it
+    val q2 = start(new InMemoryTransport)
+    try q2.processAllAvailable() finally q2.stop()
+    val sent = InMemoryTransport.drain()
+    assert(sent.forall(_._1 == "alo"), "entries must go to the configured stream")
+    assert(sent.flatMap { case (_, e) => userBodies(e.data) }.toSet === bodies.toSet)
   }
 }
